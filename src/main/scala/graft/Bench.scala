@@ -1,4 +1,7 @@
 package graft
+
+import scala.util.control.NonFatal
+
 object Bench {
 
   /** Deterministic short keys for the per-query map: the driver's BENCH
@@ -75,15 +78,25 @@ object Bench {
     // (same queries, same count() action, same min-of-2-warm-passes);
     // session warm-state (codegen cache, page cache, memoized frames) is
     // session-scoped, so sweep order does not change what pass 2 sees.
-    def time(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    //
+    // A query that throws is recorded in `failed` on both lines and is
+    // neither timed nor counted into the total — a throw after 50 ms
+    // must never read as a 0.05 s run — and the bench exits non-zero.
+    def time(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
+      try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+      catch {
+        case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: $e")
+          None
+      }
     }
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    val pass1 = ordered.map { case (_, fn) => time(fn) }
-    val pass2 = ordered.map { case (_, fn) => time(fn) }
-    val results = ordered.zip(pass1.zip(pass2)).map { case ((name, _), (p1, p2)) =>
+    val pass1 = ordered.map { case (name, fn) => time(name, fn) }
+    val pass2 = ordered.map { case (name, fn) => time(name, fn) }
+    val timed = ordered.map(_._1).zip(pass1.zip(pass2))
+    val failed = timed.collect { case (name, (p1, p2)) if p1.isEmpty || p2.isEmpty => name }
+    val results = timed.collect { case (name, (Some(p1), Some(p2))) =>
       (name, math.min(p1, p2), p1, p2)
     }
     val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
@@ -97,14 +110,16 @@ object Bench {
     // recorded, runs at different chunk settings are indistinguishable.
     val chunks = sys.props.getOrElse("graft.replay.chunks", "4")
     // Verbose line first (full names + raw passes) for local use / logs…
-    println(s"""{"metric":"total_verbose","value":$total,"unit":"sec","replay_chunks":$chunks,"queries":$qs,"raw_passes":$raw,"sf":"$sfDir"}""")
+    def names(ns: Seq[String]) = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+    println(s"""{"metric":"total_verbose","value":$total,"unit":"sec","replay_chunks":$chunks,"queries":$qs,"raw_passes":$raw,"failed":${names(failed)},"sf":"$sfDir"}""")
     // …then the LAST line is the compact artifact: short keys, 3-decimal
     // seconds, ~1.2 KB — fits whole inside the driver's tail capture so
     // every round's BENCH artifact is self-contained.
-    val short = shortNames(results.map(_._1))
+    val short = shortNames(ordered.map(_._1))
     val sq = results.map { case (k, v, _, _) => f""""${short(k)}":$v%.3f""" }
       .mkString("{", ",", "}")
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","short_names":true,"replay_chunks":$chunks,"queries":$sq,"sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","short_names":true,"replay_chunks":$chunks,"queries":$sq,"failed":${names(failed.map(short))},"sf":"$sfDir"}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.HyperLogLogPlusPlus
 import org.apache.spark.sql.types.IntegerType
 
 /** SQL surface for the engine's custom Catalyst functions, so `spark.sql`
@@ -17,9 +18,10 @@ import org.apache.spark.sql.types.IntegerType
   *
   * Registered: graft_dot, graft_array_eq_count, graft_rolling_hash
   * (scalar codegen expressions); graft_minhash(col, k), graft_simhash,
-  * graft_topk(score, id, k) (TypedImperativeAggregates — the analyzer
-  * wraps the returned AggregateFunction). Sketch parameters must be
-  * integer literals, like Spark's own approx_percentile accuracy.
+  * graft_topk(score, id, k), graft_approx_count_distinct(col, rsd)
+  * (TypedImperativeAggregates — the analyzer wraps the returned
+  * AggregateFunction). Sketch parameters must be literals (integer k,
+  * double rsd), like Spark's own approx_percentile accuracy.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -65,7 +67,12 @@ object GraftFunctions {
       args => SimHashAgg(args(0))),
     ("graft_topk",
       info("graft_topk", "_FUNC_(score, id, k) - bounded top-k by (score DESC, id ASC) (agg)"),
-      args => TopKAgg(args(0), args(1), intLit(args(2), "graft_topk k"))))
+      args => TopKAgg(args(0), args(1), intLit(args(2), "graft_topk k"))),
+    ("graft_approx_count_distinct",
+      info("graft_approx_count_distinct",
+        "_FUNC_(col, rsd) - HLL++ distinct count, equal to approx_count_distinct, over one binary buffer (agg)"),
+      // the rsd check approx_count_distinct itself applies
+      args => HllAgg(args(0), HyperLogLogPlusPlus.validateDoubleLiteral(args(1)))))
 
   /** Register on a live session (the runtime path). */
   def register(spark: SparkSession): Unit =

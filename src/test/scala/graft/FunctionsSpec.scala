@@ -115,4 +115,38 @@ class FunctionsSpec extends SparkSpecBase {
     // and the non-distinct form still admits duplicates (the contrast)
     assert(run(SketchAggs.topk(col("score"), col("id"), 3)) == Seq(11L, 11L, 11L))
   }
+
+  test("HllAgg equals approx_count_distinct: types, nulls, rsd, global and grouped") {
+    val rnd = new scala.util.Random(23)
+    // skewed values so groups see very different cardinalities, a
+    // sprinkle of nulls, and ~20k rows so the estimator leaves its
+    // exact small-range regime in the global case
+    val rows = (0 until 20000).map { i =>
+      val v = (rnd.nextGaussian() * 3000).toLong
+      (i % 7L, v, s"s$v", v / 3.0, if (i % 11 == 0) None else Some(v))
+    }
+    val df = rows.toDF("g", "l", "s", "d", "n").repartition(4).cache()
+    try {
+      for (c <- Seq("l", "s", "d", "n"); rsd <- Seq(0.01, 0.05)) {
+        val pair = Seq(
+          approx_count_distinct(col(c), rsd).as("spark"),
+          SketchAggs.approxCountDistinct(col(c), rsd).as("graft"))
+        val global = df.agg(pair.head, pair(1)).head()
+        assert(global.getLong(0) == global.getLong(1), s"global $c rsd=$rsd")
+        assert(global.getLong(1) > 0)
+        val grouped = df.groupBy("g").agg(pair.head, pair(1)).collect()
+        assert(grouped.length == 7)
+        grouped.foreach { r =>
+          assert(r.getLong(1) == r.getLong(2), s"group ${r.getLong(0)} $c rsd=$rsd")
+        }
+      }
+    } finally { df.unpersist(); () }
+  }
+
+  test("HllAgg counts 0 on empty input") {
+    val empty = Seq.empty[Long].toDF("l").repartition(4)
+    assert(empty.agg(SketchAggs.approxCountDistinct(col("l"), 0.01)).head().getLong(0) == 0L)
+    assert(Seq[Option[Long]](None, None).toDF("l")
+      .agg(SketchAggs.approxCountDistinct(col("l"), 0.05)).head().getLong(0) == 0L)
+  }
 }

@@ -48,6 +48,17 @@ class GraftExtensionsSpec extends SparkSpecBase {
       .createOrReplaceTempView("scored")
     val top = spark.sql("SELECT graft_topk(s, id, 2).id FROM scored").head().getSeq[Long](0)
     assert(top == Seq(0L, 1L))
+
+    (1L to 5000L).map(i => i * i % 1013L).toDF("v").repartition(4)
+      .createOrReplaceTempView("vals")
+    val hll = spark.sql("SELECT graft_approx_count_distinct(v, 0.02) FROM vals").head().getLong(0)
+    val apiHll = spark.table("vals")
+      .agg(graft.functions.SketchAggs.approxCountDistinct(org.apache.spark.sql.functions.col("v"), 0.02))
+      .head().getLong(0)
+    assert(hll == apiHll)
+    // a double-typed rsd literal builds the same sketch as the decimal one
+    assert(spark.sql("SELECT graft_approx_count_distinct(v, 2e-2D) FROM vals")
+      .head().getLong(0) == hll)
   }
 
   test("non-literal sketch parameter fails fast") {
@@ -58,5 +69,11 @@ class GraftExtensionsSpec extends SparkSpecBase {
     }
     assert(e.getMessage.contains("integer literal") ||
       Option(e.getCause).exists(_.getMessage.contains("integer literal")))
+
+    Seq((1L, 0.05)).toDF("v", "rsd").createOrReplaceTempView("bad_rsd")
+    val e2 = intercept[Exception] {
+      spark.sql("SELECT graft_approx_count_distinct(v, rsd) FROM bad_rsd").collect()
+    }
+    assert(e2.getMessage.contains("double literal"))
   }
 }

@@ -26,26 +26,32 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * A regression re-adding a sentinel/decoy batch re-adds a full round
   * of commit machinery per twin per bench pass and fails these counts.
   * Batches are counted through the session's listener bus (every
-  * micro-batch posts exactly one QueryProgressEvent); correctness of
+  * micro-batch posts exactly one QueryProgressEvent), for the runs the
+  * test body started only; correctness of
   * the emitted rows is pinned separately by StreamingParitySpec and the
   * DuckDB oracle.
   */
 class ReplayBatchCountSpec extends SparkSpecBase {
 
-  /** Run `body` and return how many micro-batches its streaming
-    * queries executed (progress events observed while it ran). */
+  /** Run `body` and return how many micro-batches ITS streaming queries
+    * executed. Only runs started while `body` ran are counted (captured
+    * in onQueryStarted), so a stray stream left on the shared session by
+    * another suite cannot inflate the count. */
   private def countBatches(body: => Unit): Int = {
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val runs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    @volatile var inBody = true
     val l = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        n.incrementAndGet(); ()
-      }
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        if (inBody) { runs.add(e.runId); () }
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (runs.contains(e.progress.runId)) { n.incrementAndGet(); () }
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
     spark.streams.addListener(l)
     try {
-      body
+      try body finally inBody = false
+      assert(!runs.isEmpty, "body started no streaming query")
       // the listener bus is async: wait for it to quiesce before reading
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       var last = -1

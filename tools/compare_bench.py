@@ -13,7 +13,9 @@ The baseline is the last fenced code block in BASELINE.md (the most
 recent round's "name seconds" table, three pairs per line). A query is
 flagged when bench/baseline > ratio (default 2.0 — the grading bar).
 Queries new since the baseline table are listed informationally, never
-flagged. Exit 1 iff any query is flagged, so this can gate a script.
+flagged. Queries the artifact lists as `failed` (they threw, so they
+carry no time) are reported. Exit 1 iff any query is flagged or failed,
+so this can gate a script.
 
 With the min-of-2 bench artifact, a flag here is a REAL plan change,
 not positional contention — check the JSON's raw_passes to confirm
@@ -132,9 +134,12 @@ def main():
         print(f"  new (no baseline): {name} {bench[name]:.2f}s")
     for name, sec, b in flagged:
         print(f"  FLAG {name}: {sec:.2f}s vs baseline {b:.2f}s ({sec / b:.1f}x)")
+    failed = doc.get("failed", [])
+    for name in failed:
+        print(f"  FAILED {name}: threw, no time recorded")
     if not flagged:
-        print(f"  all queries within {ratio}x of baseline")
-    sys.exit(1 if flagged else 0)
+        print(f"  all timed queries within {ratio}x of baseline")
+    sys.exit(1 if flagged or failed else 0)
 
 
 if __name__ == "__main__":
